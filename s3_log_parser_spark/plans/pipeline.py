@@ -5,8 +5,10 @@ conv_id, turn_idx, role, tool, text, ts) → one Arrow pass (DFA parse
 bank + DJB2, text dropped at the worker) → Catalyst-codegen'd
 casts/encodings + UA classify → ONE shuffle (the (ip_hash, key_hash)
 window for ST1, narrowest possible rows) → broadcast-join role/tool
-dims post-shuffle → slim table write (the checkpoint) → N filtered
-sink writes + per-sink counts from the columnar re-read.
+dims post-shuffle → slim table write (the checkpoint) → route: one
+collected counts cube over the columnar re-read (every sink's counts
+table and write layout derive from it on the driver), then N filtered
+sink writes of that re-read.
 
 Scale posture: the only wide exchange before the sinks is the ST1
 window on high-cardinality hash keys (no skew by construction); the
@@ -117,10 +119,12 @@ def run_pipeline(
     timings: dict[str, float] = {}
 
     t0 = time.perf_counter()
+    slim_schema = None  # known when this run writes slim: no inference job
     if not manifest.complete("slim"):
         slim = build_slim(transcripts, use_sql_parser=use_sql_parser)
         catalog.write(slim, "slim", mode="overwrite")
         manifest.mark("slim")
+        slim_schema = slim.schema
     timings["slim"] = time.perf_counter() - t0
 
     # route from the columnar checkpoint, not the raw text. (Measured:
@@ -129,7 +133,7 @@ def run_pipeline(
     # columnar decode beat MEMORY_AND_DISK's serialize/deserialize. On
     # a real cluster with remote object storage the trade flips; the
     # catalog seam is where a cache policy would slot in.)
-    slim = catalog.read("slim")
+    slim = catalog.read("slim", schema=slim_schema)
 
     t0 = time.perf_counter()
     sink_timings: dict[str, float] = {}

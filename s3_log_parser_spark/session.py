@@ -19,9 +19,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 
-def literal_frame(spark: SparkSession, rows: list, schema: str):
+def literal_frame(spark: SparkSession, rows: list, schema: str | StructType):
     """Small constant DataFrame as a pure-JVM literal plan (guide §4:
     eliminate the Python boundary).
 
@@ -34,13 +35,14 @@ def literal_frame(spark: SparkSession, rows: list, schema: str):
     query lists, index meta) the inline-literal form keeps everything
     in the JVM — same rows, same schema, zero Python workers.
 
-    ``schema`` is a DDL string; values are cast to the declared types.
+    ``schema`` is a DDL string or a ``StructType``; values are cast to
+    the declared types.
     Not for big/dynamic data: each cell is a py4j literal call.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    st = T._parse_datatype_string(schema)
+    st = schema if isinstance(schema, StructType) else T._parse_datatype_string(schema)
     if not rows:
         return spark.range(0, 0, 1, 1).select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in st.fields]

@@ -1,9 +1,11 @@
 """Isolated route-stage bench (guide §1.4): re-runs route_and_write
-against an already-written slim checkpoint, fresh sink dir each rep.
+against an already-written slim checkpoint, fresh sink dir each rep,
+and prints each rep's wall, its Spark job count and per-sink walls.
 
-Usage: python tools/bench_route.py [--reps N] [--slim DIR]
-Env: ROUTER_WRITE_STRATEGY / ROUTER_SCAN_SPLIT_MB / ROUTER_CONCURRENCY
-pass through to the router.
+Usage: python tools/bench_route.py --slim DIR [--reps N] [--cores N]
+``--cores`` defaults to SPARK_GRAFT_CPUS (else all cores). Env:
+ROUTER_WRITE_STRATEGY / ROUTER_SCAN_SPLIT_MB / ROUTER_CONCURRENCY pass
+through to the router.
 """
 
 from __future__ import annotations
@@ -27,10 +29,17 @@ def main() -> None:
     ap.add_argument(
         "--slim", default="/tmp/spark_graft_bench/pipe_c32/slim"
     )
+    ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
     args = ap.parse_args()
+    if not os.path.isdir(args.slim):
+        sys.exit(
+            f"bench_route: no slim checkpoint at {args.slim!r}; write one "
+            "with run_pipeline (its out_dir/slim) and pass --slim DIR"
+        )
 
-    spark = get_spark(app_name="bench-route", cores=32)
+    spark = get_spark(app_name="bench-route", cores=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
+    tracker = spark.sparkContext.statusTracker()
     out = "/tmp/bench_route_out"
 
     for i in range(args.reps):
@@ -38,11 +47,13 @@ def main() -> None:
         cat = Catalog(spark, out)
         slim = spark.read.parquet(args.slim)
         sink_t: dict[str, float] = {}
+        jobs0 = set(tracker.getJobIdsForGroup())
         t0 = time.perf_counter()
         route_and_write(slim, cat, timings_out=sink_t)
         dt = time.perf_counter() - t0
+        jobs = len(set(tracker.getJobIdsForGroup()) - jobs0)
         print(
-            f"rep {i}: route {dt:.2f}s  "
+            f"rep {i}: route {dt:.2f}s  jobs {jobs}  "
             + "  ".join(f"{k}={v:.1f}" for k, v in sink_t.items()),
             flush=True,
         )
