@@ -1,18 +1,19 @@
-"""P1-P8: vectorized grok parse of the turn ``text`` payload.
+"""P1-P8: grok parse of the turn ``text`` payload.
 
 The reference's heart is a 268-line single-pass positional tokenizer
 (``/root/reference/src/s3parser.c:93-360``: space-delimited with
 quote-toggling and bracket-depth tracking). The format is regular, so
-here it is ONE precompiled anchored regex (the "pattern bank"), applied
-two ways:
+here it is ONE anchored regex (the "pattern bank"), used two ways:
 
-- :func:`parse_text_pandas` — the hot path named by the north_star: a
-  vectorized pandas UDF (`pandas .str.extract` → C regex engine over an
-  Arrow batch; zero per-row Python) returning a struct of raw string
+- ``functions/parsing_arrow.parse_text_arrow`` — the production parse
+  of both the batch and the streaming slim plan: a capture-free DFA
+  match of this pattern for validity, positional Arrow splits for the
   fields.
-- :func:`parse_text_sql` — pure-Catalyst ``regexp_extract`` per field
-  from the same pattern; used as the JVM-side cross-check and the shape
-  the DuckDB oracle mirrors.
+- :func:`parse_text_sql` — the independent reference: pure-Catalyst
+  ``regexp_extract`` per field from the same pattern, returning the
+  full ``parsed`` struct. Tests and the benchmark's reconciliation
+  compare the production parse against it; the byte-exact round trip
+  (:func:`reassemble_text`) is checked on it.
 
 Typed casts (P4), http-code domain clamp (P3), timestamp parse (P2) and
 range split (P5) happen *after* extraction in Catalyst so failures feed
@@ -22,13 +23,10 @@ zeroing (src/s3parser.c:165-171, 216-218 — SURVEY.md §1.3).
 
 from __future__ import annotations
 
-from typing import Iterator
+import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..schemas import PARSED_FIELDS, PARSED_RAW_STRUCT
 
@@ -64,10 +62,10 @@ _FIELD_PATTERNS: list[tuple[str, str]] = [
 
 # optional trailing 27th field: quoted Range header, only on 206 rows
 # (reference: src/s3parser.c:323-340; generator src/fake_logs.c:94-99)
+_RANGE_PATTERN = r' "(?P<range_header>[^"]*)"'
+
 S3_LINE_PATTERN = (
-    "^"
-    + " ".join(p for _, p in _FIELD_PATTERNS)
-    + r'(?: "(?P<range_header>[^"]*)")?$'
+    "^" + " ".join(p for _, p in _FIELD_PATTERNS) + f"(?:{_RANGE_PATTERN})?$"
 )
 
 TS_FORMAT = "dd/MMM/yyyy:HH:mm:ss Z"  # P2 — src/s3parser.c:161 strptime fmt
@@ -75,285 +73,46 @@ TS_FORMAT = "dd/MMM/yyyy:HH:mm:ss Z"  # P2 — src/s3parser.c:161 strptime fmt
 _INT_FIELDS = {n for n, t in PARSED_FIELDS if t.typeName() in ("integer", "long")}
 
 
-def parse_text_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Hot-path grok parse: one pandas UDF → ``parsed`` struct column.
-
-    Uses mapInPandas-free scalar pandas_udf with a struct return type;
-    pandas ``.str.extract`` compiles the bank once per worker.
-    """
-
-    @pandas_udf(PARSED_RAW_STRUCT)
-    def grok(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import re
-
-        pat = re.compile(S3_LINE_PATTERN)
-        cols = [n for n, _ in PARSED_FIELDS]
-        for s in it:
-            out = s.str.extract(pat)
-            yield out[cols]
-
-    parsed = df.withColumn("_raw", grok(F.col(text_col)))
-    return _typed_from_raw(parsed, text_col)
-
-
-# fused return type: raw fields + the four DJB2 dictionary hashes.
-# ONE Python/Arrow stage for the whole parse+hash step instead of five
-# (grok + 4 djb2_udf calls) — each scalar pandas UDF is its own
-# ArrowEvalPython exchange, and the Arrow (de)serialization dominated
-# the slim materialization (42s → see BENCH notes).
-_FUSED_STRUCT = T.StructType(
-    list(PARSED_RAW_STRUCT.fields)
-    + [
-        T.StructField("ip_hash", T.LongType(), True),
-        T.StructField("key_hash", T.LongType(), True),
-        T.StructField("tool_hash", T.LongType(), True),
-        T.StructField("conv_hash", T.LongType(), True),
-    ]
-)
-
-
-def parse_text_fused(
-    df: DataFrame, text_col: str = "text", conv_col: str = "conv_id"
-) -> DataFrame:
-    """grok parse + DJB2 encode in a single Arrow-batched pandas UDF.
-
-    DJB2 uses a worker-lifetime unique-value cache — the hashed columns
-    are dictionary-like (ips, tools, keys, conv ids), so amortized cost
-    is O(distinct values) per worker, not O(rows). Semantics are
-    parity-tested against djb2_py/djb2_expr (tests/test_hashes.py) and
-    extract_path (src/s3parser.c:420-477).
-    """
-
-    @pandas_udf(_FUSED_STRUCT)
-    def grok_hash(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        import re
-
-        from .hashes import djb2_py
-
-        pat = re.compile(S3_LINE_PATTERN)
-        seg_re = re.compile(r"^/?([^/]*)")
-        cols = [n for n, _ in PARSED_FIELDS]
-        cache: dict = {}
-        CACHE_CAP = 2_000_000  # bound worker memory on adversarial keys
-
-        def h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return 5381
-            r = cache.get(v)
-            if r is None:
-                r = djb2_py(v)
-                if len(cache) < CACHE_CAP:
-                    cache[v] = r
-            return r
-
-        def seg_h(v):
-            # extract_path semantics: NULL/'' → seed, else hash of the
-            # first path segment
-            if v is None or (isinstance(v, float) and pd.isna(v)) or v == "":
-                return 5381
-            m = seg_re.match(v)
-            return h(m.group(1))
-
-        for text, conv in it:
-            out = text.str.extract(pat)
-            out = out[cols]
-            out["ip_hash"] = out["remote_ip"].map(h).astype("int64")
-            out["key_hash"] = out["key"].map(h).astype("int64")
-            out["tool_hash"] = out["key"].map(seg_h).astype("int64")
-            out["conv_hash"] = conv.map(h).astype("int64")
-            yield out
-
-    parsed = df.withColumn("_raw", grok_hash(F.col(text_col), F.col(conv_col)))
-    return _typed_from_raw(parsed, text_col, extra_fields=True)
-
-
-# minimal fused output: only what the slim table needs crosses Arrow.
-# The full 27-field struct costs ~600 B/row of Arrow transfer + struct
-# assembly; the pipeline only consumes these typed columns (the full
-# struct path stays for the byte-exact round-trip invariant).
-_SLIM_PARSE_STRUCT = T.StructType(
-    [
-        T.StructField("event_ts", T.TimestampType(), True),
-        T.StructField("parse_status", T.StringType(), False),
-        T.StructField("ip_hash", T.LongType(), False),
-        T.StructField("key_hash", T.LongType(), False),
-        T.StructField("tool_hash", T.LongType(), False),
-        T.StructField("conv_hash", T.LongType(), False),
-        T.StructField("http_code_raw", T.IntegerType(), True),
-        T.StructField("bytes_sent", T.LongType(), True),
-        T.StructField("object_size", T.LongType(), True),
-        T.StructField("total_time_ms", T.IntegerType(), True),
-        T.StructField("byte_start", T.LongType(), True),
-        T.StructField("byte_end", T.LongType(), True),
-        T.StructField("user_agent", T.StringType(), True),
-    ]
-)
-
-
-def parse_text_slim(
-    df: DataFrame, text_col: str = "text", conv_col: str = "conv_id"
-) -> DataFrame:
-    """Hot-path fused parse: grok + DJB2 + timestamp + range decode in
-    one Arrow-batched pandas UDF, returning ONLY the narrow typed
-    columns the slim table consumes.
-
-    Semantics identical to parse_text_pandas → encode_slim (pinned by
-    tests/test_pipeline.py::test_fused_equals_modular); the timestamp
-    parse honors %z and lands UTC (the reference's local-time mktime
-    bug is deliberately not reproduced — SURVEY.md §2.2 P2).
-    """
-
-    @pandas_udf(_SLIM_PARSE_STRUCT)
-    def grok_slim(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        import re
-
-        import numpy as np
-
-        from .hashes import djb2_py
-
-        pat = re.compile(S3_LINE_PATTERN)
-        seg_re = re.compile(r"^/?([^/]*)")
-        rng_re = re.compile(r"bytes=?(\d+)-(\d+)")
-        cache: dict = {}
-        CACHE_CAP = 2_000_000
-
-        def h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return 5381
-            r = cache.get(v)
-            if r is None:
-                r = djb2_py(v)
-                if len(cache) < CACHE_CAP:
-                    cache[v] = r
-            return r
-
-        def seg_h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)) or v == "":
-                return 5381
-            return h(seg_re.match(v).group(1))
-
-        def rng(v, g):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return None
-            m = rng_re.search(v)
-            return int(m.group(g)) if m else None
-
-        for text, conv in it:
-            raw = text.str.extract(pat)
-            ts = pd.to_datetime(
-                raw["ts_str"], format="%d/%b/%Y:%H:%M:%S %z", errors="coerce", utc=True
-            )
-            # unify the offset domain with the java/Arrow paths: strict
-            # ±HHMM with |offset| ≤ 18:00 (python %z alone accepts up
-            # to ±23:59 and exotic spellings like 'Z'/'+HH:MM', which
-            # java's ZoneOffset / the Arrow kernel reject — cross-parser
-            # fuzz found '-2359' diverging)
-            off = raw["ts_str"].str.extract(r" [+-](\d{2})(\d{2})$")
-            off_ok = (
-                off[0].notna()
-                & (pd.to_numeric(off[1], errors="coerce") <= 59)
-                & (
-                    pd.to_numeric(off[0], errors="coerce") * 60
-                    + pd.to_numeric(off[1], errors="coerce")
-                    <= 18 * 60
-                )
-            )
-            ts = ts.where(off_ok, pd.NaT)
-            status = np.where(
-                raw["owner"].isna(),
-                "bad_format",
-                np.where(ts.isna() & raw["ts_str"].notna(), "bad_time", "ok"),
-            )
-            out = pd.DataFrame(
-                {
-                    "event_ts": ts,
-                    "parse_status": status,
-                    "ip_hash": raw["remote_ip"].map(h).astype("int64"),
-                    "key_hash": raw["key"].map(h).astype("int64"),
-                    "tool_hash": raw["key"].map(seg_h).astype("int64"),
-                    "conv_hash": conv.map(h).astype("int64"),
-                    "http_code_raw": pd.to_numeric(
-                        raw["http_code"], errors="coerce"
-                    ).astype("Int32"),
-                    "bytes_sent": pd.to_numeric(
-                        raw["bytes_sent"], errors="coerce"
-                    ).astype("Int64"),
-                    "object_size": pd.to_numeric(
-                        raw["object_size"], errors="coerce"
-                    ).astype("Int64"),
-                    "total_time_ms": pd.to_numeric(
-                        raw["total_time_ms"], errors="coerce"
-                    ).astype("Int32"),
-                    "byte_start": raw["range_header"]
-                    .map(lambda v: rng(v, 1))
-                    .astype("Int64"),
-                    "byte_end": raw["range_header"]
-                    .map(lambda v: rng(v, 2))
-                    .astype("Int64"),
-                    "user_agent": raw["user_agent"],
-                }
-            )
-            yield out
-
-    p = df.withColumn("_p", grok_slim(F.col(text_col), F.col(conv_col)))
-    for f in _SLIM_PARSE_STRUCT.fields:
-        p = p.withColumn(f.name, F.col("_p")[f.name])
-    return p.drop("_p")
-
-
 def parse_text_sql(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Catalyst-only variant: regexp_extract per field, same pattern.
+    """Catalyst-only reference parse: ``regexp_extract`` per field from
+    the pattern bank → ``parsed`` struct, ``event_ts``, ``parse_status``.
 
-    regexp_extract needs numbered groups; group i+1 corresponds to
-    field i because the bank has exactly one group per field.
+    ``regexp_extract`` needs numbered groups and returns '' both for a
+    group that did not take part and for an empty match, so the
+    optional range is wrapped in one more group: the range is present
+    iff that outer group (at least the 3 chars ``' ""'``) is non-empty,
+    which keeps a matched empty range ``""`` apart from no range.
     """
-    # convert named groups to plain groups for JVM regex group indexing
-    import re as _re
-
-    plain = _re.sub(r"\(\?P<[^>]+>", "(", S3_LINE_PATTERN)
-    exprs = []
-    for i, (name, _) in enumerate(PARSED_FIELDS):
-        g = F.regexp_extract(F.col(text_col), plain, i + 1)
-        exprs.append(g.alias(name))
-    # regexp_extract returns '' on miss — use a match probe to distinguish
-    matched = F.col(text_col).rlike(plain)
-    raw = F.when(matched, F.struct(*exprs)).otherwise(F.lit(None))
-    parsed = df.withColumn("_raw", raw.cast(PARSED_RAW_STRUCT))
-    return _typed_from_raw(parsed, text_col, empty_range_is_null=True)
-
-
-def _typed_from_raw(
-    df: DataFrame,
-    text_col: str,
-    empty_range_is_null: bool = False,
-    extra_fields: bool = False,
-) -> DataFrame:
-    """Shared cast + parse_status derivation from the raw string struct.
-
-    ``extra_fields``: the fused UDF also carries the four DJB2 hash
-    columns — surface them as top-level columns.
-    """
+    fields = " ".join(_plain_groups(p) for _, p in _FIELD_PATTERNS)
+    plain = f"^{fields}({_plain_groups(_RANGE_PATTERN)})?$"
+    text = F.col(text_col)
+    n = len(_FIELD_PATTERNS)  # group i+1 = field i; n+1 = outer range; n+2 = range
+    exprs = [
+        F.regexp_extract(text, plain, i + 1).alias(name)
+        for i, (name, _) in enumerate(_FIELD_PATTERNS)
+    ]
+    exprs.append(
+        F.when(
+            F.regexp_extract(text, plain, n + 1) != "",
+            F.regexp_extract(text, plain, n + 2),
+        ).alias("range_header")
+    )
+    # regexp_extract also returns '' on a miss — a match probe tells a
+    # bad_format line apart
+    raw = F.when(text.rlike(plain), F.struct(*exprs)).cast(PARSED_RAW_STRUCT)
     r = F.col("_raw")
-    fields: list[Column] = []
-    for name, typ in PARSED_FIELDS:
-        c = r[name]
-        if name == "range_header" and empty_range_is_null:
-            c = F.when(c == "", F.lit(None)).otherwise(c)
-        if name in _INT_FIELDS:
-            # try_cast: NULL on non-numeric ('-') in BOTH ANSI modes —
-            # a plain cast throws CAST_INVALID_INPUT under ANSI
-            c = c.try_cast(typ)
-        fields.append(c.alias(name))
-
+    # try_cast: NULL on non-numeric ('-') in BOTH ANSI modes — a plain
+    # cast throws CAST_INVALID_INPUT under ANSI
+    fields_typed = [
+        (r[name].try_cast(typ) if name in _INT_FIELDS else r[name]).alias(name)
+        for name, typ in PARSED_FIELDS
+    ]
     # try_to_timestamp: NULL on malformed input in BOTH ANSI modes (the
     # bad_time rows would throw CANNOT_PARSE_TIMESTAMP under ANSI)
     ts = F.try_to_timestamp(r["ts_str"], F.lit(TS_FORMAT))
-    out = (
-        df.withColumn("parsed", F.struct(*fields))
+    return (
+        df.withColumn("_raw", raw)
+        .withColumn("parsed", F.struct(*fields_typed))
         .withColumn("event_ts", ts)
         .withColumn(
             "parse_status",
@@ -361,11 +120,13 @@ def _typed_from_raw(
             .when(r["ts_str"].isNotNull() & ts.isNull(), F.lit("bad_time"))
             .otherwise(F.lit("ok")),
         )
+        .drop("_raw")
     )
-    if extra_fields:
-        for h in ("ip_hash", "key_hash", "tool_hash", "conv_hash"):
-            out = out.withColumn(h, r[h])
-    return out.drop("_raw")
+
+
+def _plain_groups(pattern: str) -> str:
+    """named groups → numbered groups, for JVM ``regexp_extract``."""
+    return re.sub(r"\(\?P<[^>]+>", "(", pattern)
 
 
 def clamp_http_code(col: Column | str) -> Column:

@@ -1,10 +1,11 @@
-"""Arrow-native fused parse — the 100 TB hot path.
+"""Arrow-native fused parse — the one production parse, batch and
+streaming (``plans.pipeline.parse_encode``).
 
-Why this exists: the pandas grok UDF allocates ~27 Python string
-objects per row; at 32 concurrent workers that saturates the memory
-bus/allocator and the parse stage stops scaling (measured: extract-only
-29 s on 32 cores vs 19 s on 8 — negative scaling). This variant keeps
-every per-row operation inside Arrow C++ kernels via ``mapInArrow``:
+Why Arrow: a pandas grok UDF allocates ~27 Python string objects per
+row; at 32 concurrent workers that saturates the memory bus/allocator
+and the parse stage stops scaling (measured: extract-only 29 s on 32
+cores vs 19 s on 8 — negative scaling). This kernel keeps every
+per-row operation inside Arrow C++ kernels via ``mapInArrow``:
 
 - validity via ONE capture-free RE2 match (pure DFA — a 10-capture
   ``extract_regex`` falls back to RE2's ~9× slower capture engines,
@@ -17,8 +18,10 @@ every per-row operation inside Arrow C++ kernels via ``mapInArrow``:
   (honoring %z, unlike the reference's local-time mktime — SURVEY P2);
 - guarded casts (digit-mask → cast) for the numeric fields.
 
-Output columns and semantics are identical to
-``parsing.parse_text_slim`` (pinned by tests/test_pipeline.py).
+Its slim rows equal those of the independent reference,
+``parsing.parse_text_sql`` + ``hashes.djb2_expr`` (pinned by
+tests/test_pipeline.py, tests/test_parsing.py and the fuzz in
+tests/test_property_roundtrip.py).
 """
 
 from __future__ import annotations
@@ -30,33 +33,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .parsing import PARSED_FIELDS, S3_LINE_PATTERN
-
-# fields that must capture for the slim record; everything else becomes
-# non-capturing to halve RE2's per-row work
-_SLIM_NEEDED = {
-    "owner",
-    "ts_str",
-    "remote_ip",
-    "key",
-    "http_code",
-    "bytes_sent",
-    "object_size",
-    "total_time_ms",
-    "user_agent",
-    "range_header",
-}
-
-
-def _reduced_pattern() -> str:
-    pat = S3_LINE_PATTERN
-    for name, _ in PARSED_FIELDS:
-        if name not in _SLIM_NEEDED:
-            pat = pat.replace(f"(?P<{name}>", "(?:")
-    return pat
-
-
-SLIM_ARROW_PATTERN = _reduced_pattern()
+from .parsing import S3_LINE_PATTERN
 
 # capture-free twin of the full line pattern: with zero capture groups
 # RE2 stays in its DFA (a single linear scan); with 10 captures it falls
@@ -138,8 +115,8 @@ def parse_text_arrow(
 
             # validity: one capture-free DFA pass (same regex shape the
             # slower engines would match — ok ≡ "owner capture non-null"
-            # of the old extract_regex form, pinned by the 3-way parser
-            # equality tests)
+            # of the old extract_regex form, pinned by the parser
+            # equality tests against the SQL reference)
             okdfa = pc.fill_null(
                 pc.match_substring_regex(text, VALIDITY_PATTERN), False
             )
@@ -206,8 +183,8 @@ def parse_text_arrow(
 
             # timestamp: the bracket must hold exactly "date offset"
             # (the %d/%b/%Y:%H:%M:%S %z shape); any other token count
-            # → bad_time, matching the pandas/SQL parsers' strict
-            # format parse instead of extracting from shifted tokens
+            # → bad_time, matching the SQL reference's strict format
+            # parse instead of extracting from shifted tokens
             ts_parts = pc.split_pattern(ts_tok, " ")
             base = pc.if_else(
                 pc.equal(pc.fill_null(pc.list_value_length(ts_parts), 0), 2),
@@ -224,12 +201,11 @@ def parse_text_arrow(
             )
             # offset handling via the (tiny) distinct-offset dictionary;
             # strict "±HHMM]" shape — a malformed offset is bad_time
-            # (NULL), not a silent +0000. Domain = the INTERSECTION of
-            # all three parser engines: java's ZoneOffset caps at
-            # ±18:00 and both java/python require MM ≤ 59, so anything
-            # looser here would diverge from the pandas/SQL paths
-            # (found by the cross-parser fuzz: '-2359' parses under
-            # python %z but not java)
+            # (NULL), not a silent +0000. Domain = java's: ZoneOffset
+            # caps at ±18:00 and requires MM ≤ 59, so anything looser
+            # here would diverge from the SQL reference (found by the
+            # cross-parser fuzz: '-2359' parses under python %z but
+            # not java)
             od = pc.dictionary_encode(le_s(ts_parts, 1))
 
             def off_secs(v):
@@ -262,7 +238,7 @@ def parse_text_arrow(
 
             # shape-degenerate rows still matched the grammar (okdfa),
             # so they classify as bad_time (unparseable timestamp — the
-            # pandas/SQL parsers' verdict), never bad_format
+            # SQL reference's verdict), never bad_format
             status = pc.if_else(
                 pc.invert(okdfa),
                 pa.scalar("bad_format"),

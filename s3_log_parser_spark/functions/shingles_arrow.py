@@ -27,14 +27,13 @@ Semantics reproduced exactly:
   their tokens (empty text → the bare seed).
 - distinct with FIRST-OCCURRENCE order, matching ``array_distinct``.
 
-``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` switches consumers back to the
-pure-Catalyst kernel (the cross-check path; parity is also pinned by
-tests/test_dedup.py).
+The pure-Catalyst kernel stays as the reference these values are
+pinned against (tests/test_shingles_arrow.py, tests/test_dedup.py) and
+as the form for the other hash modes.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -45,13 +44,6 @@ from ..schemas import DJB2_SEED
 
 _WS = re.compile(r"\s+", re.ASCII)
 _M32 = 0xFFFFFFFF
-
-
-def arrow_kernel_enabled() -> bool:
-    return (
-        os.environ.get("SPARK_GRAFT_SHINGLE_IMPL", "arrow").lower()
-        != "catalyst"
-    )
 
 
 # --- XXH64 (the production shingle family, r7) -------------------------

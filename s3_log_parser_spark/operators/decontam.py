@@ -36,9 +36,9 @@ def contamination_hits(
     shingle hash family (same policy as the dedup suite: ``djb2`` is
     the oracle-parity family, ``xxhash64`` the 64-bit codegen
     production family — both sides must use the same one)."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
+    if mode in ("djb2", "xxhash64"):
         # vectorized Arrow shingle kernel (bit-exact; the Catalyst
         # n=8 expression chain alone cost 4.3 s/evaluation at sf0.1)
         bench = (

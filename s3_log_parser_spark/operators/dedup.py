@@ -163,14 +163,13 @@ def shingle_frame(
     to :func:`jaccard_pairs_from_index` / :func:`incremental_dedup` via
     :func:`build_dedup_index` instead of recomputing per branch.
 
-    Both hash families run the vectorized Arrow kernel by default
-    (bit-exact values, ~3-12× the Catalyst expression chain — see
-    functions/shingles_arrow.py; xxhash64 added r7);
-    ``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` restores the pure-Catalyst
-    form."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    Both hash families run the vectorized Arrow kernel (bit-exact
+    values, ~3-12× the Catalyst expression chain — see
+    functions/shingles_arrow.py; xxhash64 added r7); other modes take
+    the pure-Catalyst form."""
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
+    if mode in ("djb2", "xxhash64"):
         return with_shingles(
             df.select(F.col(id_col).alias("id"), F.col(text_col)),
             text_col, n, keep=("id",), mode=mode,
@@ -381,9 +380,9 @@ def ngram_jaccard_pairs(
     Pass ``max_df=None`` explicitly for exact-at-any-size, or an int to
     choose the cap.
     """
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
+    if mode in ("djb2", "xxhash64"):
         hdf = with_shingles(
             df.select(
                 F.col(id_col).alias("id"),
@@ -627,19 +626,28 @@ def simhash_df(
     text_col: str = "text",
     bits: int = 16,
 ) -> DataFrame:
-    """Scale-path SimHash: one row-local vectorized Arrow stage by
-    default (r7 — functions/shingles_arrow.with_simhash computes the
-    identical integer signature with numpy segment sums and ZERO
-    shuffle; the explode + B-conditional-sums aggregate below shuffled
-    the whole exploded token stream). Returns (id, simhash).
-    ``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` restores the aggregate form."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_simhash
+    """Scale-path SimHash: one row-local vectorized Arrow stage (r7 —
+    functions/shingles_arrow.with_simhash computes the identical
+    integer signature with numpy segment sums and ZERO shuffle; the
+    explode + B-conditional-sums aggregate, kept as the test reference
+    :func:`_simhash_df_catalyst`, shuffles the whole exploded token
+    stream). Returns (id, simhash)."""
+    from ..functions.shingles_arrow import with_simhash
 
-    if arrow_kernel_enabled():
-        return with_simhash(
-            df.select(F.col(id_col).alias("id"), F.col(text_col)),
-            text_col, bits, keep=("id",),
-        )
+    return with_simhash(
+        df.select(F.col(id_col).alias("id"), F.col(text_col)),
+        text_col, bits, keep=("id",),
+    )
+
+
+def _simhash_df_catalyst(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    bits: int = 16,
+) -> DataFrame:
+    """Reference for :func:`simhash_df`: explode the token hashes and
+    take B conditional sums per document (one shuffle)."""
     hs = df.select(
         F.col(id_col).alias("id"),
         F.explode(

@@ -66,9 +66,9 @@ def bucket_frame(
     through the vectorized Arrow shingle kernel in djb2 mode (bit-exact
     values; the bucket fold on the small ``sh`` arrays stays Catalyst),
     the pure-Catalyst column form otherwise."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
+    if mode in ("djb2", "xxhash64"):
         sh = with_shingles(
             df.select(*keep, F.col(text_col)), text_col, n, keep=keep,
             mode=mode,

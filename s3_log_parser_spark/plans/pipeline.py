@@ -25,8 +25,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS, encode_slim
-from ..functions.parsing import parse_text_pandas, parse_text_sql
+from ..functions.encode import SLIM_COLUMNS, encode_slim_flat
+from ..functions.hashes import djb2_expr, path_segment_hash
+from ..functions.parsing import parse_range, parse_text_sql
+from ..functions.parsing_arrow import parse_text_arrow
 from ..operators.enrich import classify_when, enrich_role_tool
 from ..operators.flags import with_flags
 from ..operators.router import Route, default_routes, route_and_write
@@ -42,53 +44,61 @@ class PipelineResult:
     lineage: DataFrame | None = None
 
 
-def build_slim(
-    transcripts: DataFrame,
-    use_sql_parser: bool = False,
-    use_udf_hash: bool = True,
-    fused: bool = True,
-    arrow: bool = True,
-) -> DataFrame:
-    """The logical plan for transcripts → slim (no writes, no actions).
+def parse_encode(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFrame:
+    """Parse → encode → UA classify: the prefix that the batch
+    (:func:`build_slim`) and streaming (``streaming.stream``) slim
+    plans share.
 
-    Default path is the Arrow-native fused parse (mapInArrow + RE2 +
-    dictionary-encoded DJB2) — exactly ONE vectorized stage, zero
-    per-row Python objects (north_rule). ``arrow=False`` selects the
-    pandas fused UDF; ``use_sql_parser`` the zero-Python Catalyst
-    variant (cross-check paths, all equality-pinned in tests).
+    The parse is the Arrow kernel (one ``mapInArrow`` stage: DFA parse
+    bank + DJB2, text dropped at the worker). ``use_sql_parser`` swaps
+    in the independent zero-Python reference — ``parse_text_sql`` +
+    ``djb2_expr``, projected to the Arrow kernel's flat columns — that
+    tests and the benchmark reconcile the production parse against.
+    Both feed the same ``encode_slim_flat``.
     """
-    if fused and not use_sql_parser:
-        from ..functions.encode import encode_slim_flat
-
-        if arrow:
-            from ..functions.parsing_arrow import parse_text_arrow
-
-            df = parse_text_arrow(transcripts, "text", "conv_id")
-        else:
-            from ..functions.parsing import parse_text_slim
-
-            df = parse_text_slim(transcripts, "text", "conv_id")
-        df = encode_slim_flat(df)
-        df = classify_when(df).drop("user_agent")
+    if use_sql_parser:
+        df = _parse_reference(transcripts)
     else:
-        if use_sql_parser:
-            df = parse_text_sql(transcripts, "text")
-            df = encode_slim(df, use_udf_hash=False)
-        else:
-            df = parse_text_pandas(transcripts, "text")
-            df = encode_slim(df, use_udf_hash=use_udf_hash)
-        # E7/E8: pattern banks are compile-time constants → CASE WHEN
-        # chains (whole-stage codegen); the data-driven dims (role/tool)
-        # go through real broadcast hash joins.
-        df = classify_when(
-            df.withColumn("user_agent", F.col("parsed")["user_agent"])
-        ).drop("user_agent")
-    # window BEFORE the broadcast enrich: with_flags' ST1 exchange is
+        df = parse_text_arrow(transcripts, "text", "conv_id")
+    # E7/E8: pattern banks are compile-time constants → CASE WHEN
+    # chains (whole-stage codegen)
+    return classify_when(encode_slim_flat(df)).drop("user_agent")
+
+
+def _parse_reference(transcripts: DataFrame) -> DataFrame:
+    """``parse_text_sql`` + ``djb2_expr``, projected to the columns
+    ``parse_text_arrow`` emits."""
+    p = F.col("parsed")
+    byte_start, byte_end = parse_range(p["range_header"])
+    return parse_text_sql(transcripts, "text").select(
+        *[c for c in transcripts.columns if c != "text"],
+        "event_ts",
+        "parse_status",
+        djb2_expr(p["remote_ip"]).alias("ip_hash"),
+        djb2_expr(p["key"]).alias("key_hash"),
+        path_segment_hash(p["key"]).alias("tool_hash"),
+        djb2_expr(F.col("conv_id")).alias("conv_hash"),
+        p["http_code"].alias("http_code_raw"),
+        "parsed.bytes_sent",
+        "parsed.object_size",
+        "parsed.total_time_ms",
+        byte_start.alias("byte_start"),
+        byte_end.alias("byte_end"),
+        "parsed.user_agent",
+    )
+
+
+def build_slim(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFrame:
+    """The logical plan for transcripts → slim (no writes, no actions):
+    :func:`parse_encode`, then the ST1 flags window and the role/tool
+    lookups. ``use_sql_parser`` selects the reference parse (see
+    :func:`parse_encode`).
+    """
+    # window BEFORE the role/tool enrich: with_flags' ST1 exchange is
     # the DAG's one wide shuffle, so it should carry the narrowest rows
-    # possible — the role/tool dim columns (3 ints/row) are attached by
-    # broadcast joins on the post-shuffle side instead (broadcast hash
-    # joins are position-independent; column values are unchanged)
-    df = with_flags(df)
+    # possible — the role/tool dim columns (3 ints/row) are attached on
+    # the post-shuffle side instead (column values are unchanged)
+    df = with_flags(parse_encode(transcripts, use_sql_parser))
     # r7: the role/tool dims are plan-time constants, so the pipeline
     # uses the CASE-WHEN lookup form — same columns/values as the left
     # broadcast join (parity-pinned in tests), zero BroadcastExchange
@@ -103,7 +113,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run-0",
     routes: list[Route] | None = None,
-    use_sql_parser: bool = False,
     verbose: bool = False,
 ) -> PipelineResult:
     """Execute the full DAG with manifest-gated idempotent resume.
@@ -121,7 +130,7 @@ def run_pipeline(
     t0 = time.perf_counter()
     slim_schema = None  # known when this run writes slim: no inference job
     if not manifest.complete("slim"):
-        slim = build_slim(transcripts, use_sql_parser=use_sql_parser)
+        slim = build_slim(transcripts)
         catalog.write(slim, "slim", mode="overwrite")
         manifest.mark("slim")
         slim_schema = slim.schema

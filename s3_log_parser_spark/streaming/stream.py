@@ -5,10 +5,12 @@ users tail transcript tables continuously. Shape:
 
 - ``readStream`` on the transcripts source (file/Iceberg/Kafka behind
   the same seam),
-- the identical ``build_slim`` column logic MINUS the ST1 window
-  (windows over unbounded data need watermark state): first-occurrence
-  dedup becomes ``dropDuplicatesWithinWatermark`` on (ip_hash,
-  key_hash) after ``withWatermark(ts, delay)``,
+- the batch plan's own parse → encode prefix
+  (``plans.pipeline.parse_encode``: the Arrow parse kernel), then the
+  same role/tool lookups, MINUS the ST1 window (windows over unbounded
+  data need watermark state): first-occurrence dedup becomes
+  ``dropDuplicatesWithinWatermark`` on (ip_hash, key_hash) after
+  ``withWatermark(ts, delay)``,
 - ``foreachBatch`` multi-sink router — the streaming-native form of
   the batch cache-then-filter fan-out (single pass per micro-batch),
 - tumbling-day windowed counts reproduce the A2 by-day aggregate.
@@ -19,26 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS, encode_slim
-from ..functions.parsing import parse_text_pandas
-from ..operators.enrich import classify_when, enrich_role_tool
+from ..functions.encode import SLIM_COLUMNS
+from ..operators.enrich import enrich_role_tool
+from ..operators.flags import chunk_flags
 from ..operators.router import Route, default_routes
+from ..plans.pipeline import parse_encode
 from ..sources.catalog import Catalog
 
 
 def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """streaming version of plans.pipeline.build_slim: same parse,
-    encode, enrich; flags without the ST1 window (stateless bitmask
-    with is_first=false; the dedup flag is applied by the router via
-    dropDuplicatesWithinWatermark on the start-row stream)."""
-    from ..operators.flags import chunk_flags
-
-    df = parse_text_pandas(transcripts, "text")
-    df = encode_slim(df)
-    df = classify_when(
-        df.withColumn("user_agent", F.col("parsed")["user_agent"])
-    ).drop("user_agent")
-    df = enrich_role_tool(df)
+    """streaming version of plans.pipeline.build_slim: the same
+    ``parse_encode`` prefix and role/tool lookups; flags without the
+    ST1 window (stateless bitmask with is_first=false; the dedup flag
+    is applied by the router via dropDuplicatesWithinWatermark on the
+    start-row stream)."""
+    df = enrich_role_tool(parse_encode(transcripts), method="expr")
     df = df.withColumn(
         "flags",
         chunk_flags(

@@ -1,12 +1,12 @@
-"""E2 DJB2 kernel parity — all three forms agree with the byte-exact
-pure-Python oracle (reference semantics src/s3parser.c:461-477)."""
+"""E2 DJB2 kernel parity — the Catalyst and numpy forms agree with the
+byte-exact pure-Python oracle (reference semantics
+src/s3parser.c:461-477)."""
 
 from pyspark.sql import functions as F
 
 from s3_log_parser_spark.functions.hashes import (
     djb2_expr,
     djb2_py,
-    djb2_udf,
     first_path_segment,
     path_segment_hash,
 )
@@ -31,23 +31,14 @@ def test_djb2_py_golden():
 def test_djb2_spark_forms_match_python(spark):
     vals = TOOL_NAMES + ["", "203.0.113.7", "/show/ep.mp3", "x" * 50]
     df = spark.createDataFrame([(v,) for v in vals], "s string")
-    rows = df.select(
-        "s",
-        djb2_udf(F.col("s")).alias("udf"),
-        djb2_expr(F.col("s")).alias("expr"),
-    ).collect()
+    rows = df.select("s", djb2_expr(F.col("s")).alias("expr")).collect()
     for r in rows:
-        want = djb2_py(r["s"])
-        assert r["udf"] == want, f"udf mismatch for {r['s']!r}"
-        assert r["expr"] == want, f"expr mismatch for {r['s']!r}"
+        assert r["expr"] == djb2_py(r["s"]), f"expr mismatch for {r['s']!r}"
 
 
 def test_djb2_null_is_seed(spark):
     df = spark.createDataFrame([(None,)], "s string")
-    r = df.select(
-        djb2_udf(F.col("s")).alias("udf"), djb2_expr(F.col("s")).alias("expr")
-    ).collect()[0]
-    assert r["udf"] == DJB2_SEED
+    r = df.select(djb2_expr(F.col("s")).alias("expr")).collect()[0]
     assert r["expr"] == DJB2_SEED
 
 

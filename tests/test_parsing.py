@@ -6,7 +6,6 @@ from s3_log_parser_spark.functions.parsing import (
     clamp_http_code,
     contains_pattern,
     parse_range,
-    parse_text_pandas,
     parse_text_sql,
     reassemble_text,
 )
@@ -15,7 +14,7 @@ from s3_log_parser_spark.functions.parsing import (
 def test_round_trip_text_equality(spark, transcripts):
     """parse(text) → reassemble == text for every ok row, under stable
     (conv_id, turn_idx) ordering (north_rule per-row invariant)."""
-    parsed = parse_text_pandas(transcripts)
+    parsed = parse_text_sql(transcripts)
     ok = parsed.filter(F.col("parse_status") == "ok")
     bad = ok.withColumn("rebuilt", reassemble_text(F.col("parsed"))).filter(
         F.col("rebuilt") != F.col("text")
@@ -25,18 +24,8 @@ def test_round_trip_text_equality(spark, transcripts):
     assert ok.count() > transcripts.count() * 0.98
 
 
-def test_pandas_and_sql_parsers_agree(spark, transcripts):
-    a = parse_text_pandas(transcripts).select(
-        "conv_id", "turn_idx", "parsed", "parse_status"
-    )
-    b = parse_text_sql(transcripts).select(
-        "conv_id", "turn_idx", "parsed", "parse_status"
-    )
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
 def test_parse_status_classes(spark, transcripts):
-    parsed = parse_text_pandas(transcripts)
+    parsed = parse_text_sql(transcripts)
     classes = {
         r["parse_status"]: r["count"]
         for r in parsed.groupBy("parse_status").count().collect()
@@ -52,8 +41,25 @@ def test_parsed_fields_values(spark):
         '"Spotify/8.8 Android" v1 H1 SigV2 C A host.example.com TLSv1.2 arn false '
         '"bytes=0-1023"'
     )
-    df = spark.createDataFrame([(line,)], "text string")
-    r = parse_text_pandas(df).select("parsed.*", "event_ts", "parse_status").collect()[0]
+    # a matched-but-empty range '""' stays '' (not NULL), so the line
+    # still reassembles byte-exact; no range at all is NULL
+    empty_range = line.replace('"bytes=0-1023"', '""')
+    no_range = line.replace(' "bytes=0-1023"', "")
+    df = spark.createDataFrame(
+        [(0, line), (1, empty_range), (2, no_range)], "i int, text string"
+    )
+    rows = (
+        parse_text_sql(df)
+        .select(
+            "i", "text", "parsed.*", "event_ts", "parse_status",
+            reassemble_text(F.col("parsed")).alias("rebuilt"),
+        )
+        .orderBy("i")
+        .collect()
+    )
+    assert [x["rebuilt"] for x in rows] == [x["text"] for x in rows]
+    assert rows[1]["range_header"] == "" and rows[2]["range_header"] is None
+    r = rows[0]
     assert r["owner"] == "own"
     assert r["remote_ip"] == "1.2.3.4"
     assert r["key"] == "/show/ep.mp3"
@@ -137,10 +143,11 @@ def _odd_ts_lines():
 
 
 def test_parser_equality_on_odd_timestamp_brackets(spark):
-    """all three slim builders agree row-for-row on bracket shapes the
-    generator never emits (1-token / 3-token / junk-offset timestamps):
-    the Arrow positional parser anchors ip/key from the line END, so a
-    variable-width bracket cannot shift field extraction."""
+    """the Arrow slim plan and the Catalyst reference agree row-for-row
+    on bracket shapes the generator never emits (1-token / 3-token /
+    junk-offset timestamps): the Arrow positional parser anchors ip/key
+    from the line END, so a variable-width bracket cannot shift field
+    extraction."""
     from s3_log_parser_spark.plans.pipeline import build_slim
 
     rows = [
@@ -151,13 +158,10 @@ def test_parser_equality_on_odd_timestamp_brackets(spark):
         rows, "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp"
     )
-    arrow = build_slim(df, arrow=True)
-    pandas_fused = build_slim(df, arrow=False)
-    modular = build_slim(df, fused=False)
-    assert arrow.exceptAll(pandas_fused).isEmpty()
-    assert pandas_fused.exceptAll(arrow).isEmpty()
-    assert arrow.exceptAll(modular).isEmpty()
-    assert modular.exceptAll(arrow).isEmpty()
+    arrow = build_slim(df)
+    ref = build_slim(df, use_sql_parser=True)
+    assert arrow.exceptAll(ref).isEmpty()
+    assert ref.exceptAll(arrow).isEmpty()
 
     got = {r["turn_idx"]: r for r in arrow.collect()}
     assert got[0]["parse_status"] == "ok"

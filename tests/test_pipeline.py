@@ -105,23 +105,20 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts, tmp_path):
 
 
 def test_parser_paths_agree(spark, transcripts):
-    """the three parse implementations — Arrow-native fused (hot path),
-    pandas fused, and modular pandas+encode — produce identical slim
+    """the production Arrow parse and the independent Catalyst
+    reference (parse_text_sql + djb2_expr) produce identical slim
     tables (exceptAll both ways empty)."""
-    arrow = build_slim(transcripts, arrow=True)
-    pandas_fused = build_slim(transcripts, arrow=False)
-    modular = build_slim(transcripts, fused=False)
-    assert arrow.exceptAll(pandas_fused).isEmpty()
-    assert pandas_fused.exceptAll(arrow).isEmpty()
-    assert arrow.exceptAll(modular).isEmpty()
-    assert modular.exceptAll(arrow).isEmpty()
+    arrow = build_slim(transcripts)
+    ref = build_slim(transcripts, use_sql_parser=True)
+    assert arrow.exceptAll(ref).isEmpty()
+    assert ref.exceptAll(arrow).isEmpty()
 
 
 def test_no_python_udf_outside_parse(spark, transcripts):
     """north_rule 'no per-row Python': the DAG's only Python is the
     Arrow-batched grok/DJB2 stage; verify the SQL-parser variant plans
     zero Python evals end-to-end."""
-    slim = build_slim(transcripts, use_sql_parser=True, use_udf_hash=False)
+    slim = build_slim(transcripts, use_sql_parser=True)
     plan = slim._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python UDF
     assert "ArrowEvalPython" not in plan  # fully JVM in this variant

@@ -12,7 +12,7 @@ import string
 from hypothesis import given, settings, strategies as st
 
 from s3_log_parser_spark.functions.parsing import (
-    parse_text_pandas,
+    parse_text_sql,
     reassemble_text,
 )
 
@@ -89,7 +89,7 @@ def test_roundtrip_on_fuzzed_wellformed_lines(spark):
 
     gather()
     df = spark.createDataFrame([(l,) for l in lines], "text string")
-    parsed = parse_text_pandas(df)
+    parsed = parse_text_sql(df)
     from pyspark.sql import functions as F
 
     out = parsed.select(
@@ -111,18 +111,20 @@ def test_junk_lines_never_crash(spark):
         "a b [c] d e f g h",  # too few fields
     ]
     df = spark.createDataFrame([(j,) for j in junk], "text string")
-    got = parse_text_pandas(df).select("parse_status").collect()
+    got = parse_text_sql(df).select("parse_status").collect()
     assert all(r["parse_status"] == "bad_format" for r in got)
 
 
 def test_three_parser_slim_equality_on_fuzzed_lines(spark):
-    """hypothesis-driven 3-way parser equality (ADVICE r3 #1 hardening):
-    the Arrow positional kernel, pandas fused UDF, and modular pandas
-    path must produce identical slim rows for arbitrary grammar-legal
-    lines — including brackets with 0..4 space-separated tokens and
-    junk/valid offset spellings. Scope matches the kernels' documented
-    assumption: no '"' inside unquoted fields or the timestamp bracket
-    (real S3 logs URL-encode them)."""
+    """hypothesis-driven parser equality (ADVICE r3 #1 hardening): the
+    Arrow positional kernel and the Catalyst reference (parse_text_sql
+    + djb2_expr) must produce identical slim rows for arbitrary
+    grammar-legal lines — including brackets with 0..4 space-separated
+    tokens and junk/valid offset spellings. Scope matches the kernels'
+    documented assumption: no '"' inside unquoted fields or the
+    timestamp bracket (real S3 logs URL-encode them). The alphabets
+    stay ASCII: djb2_expr folds codepoints, so byte-exact non-ASCII
+    hashing is pinned by test_djb2_numpy_parity instead."""
     from hypothesis import given, settings, strategies as st
 
     from s3_log_parser_spark.plans.pipeline import build_slim
@@ -194,10 +196,7 @@ def test_three_parser_slim_equality_on_fuzzed_lines(spark):
         rows, "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp"
     )
-    arrow = build_slim(df, arrow=True)
-    pandas_fused = build_slim(df, arrow=False)
-    modular = build_slim(df, fused=False)
-    assert arrow.exceptAll(pandas_fused).isEmpty()
-    assert pandas_fused.exceptAll(arrow).isEmpty()
-    assert arrow.exceptAll(modular).isEmpty()
-    assert modular.exceptAll(arrow).isEmpty()
+    arrow = build_slim(df)
+    ref = build_slim(df, use_sql_parser=True)
+    assert arrow.exceptAll(ref).isEmpty()
+    assert ref.exceptAll(arrow).isEmpty()

@@ -52,8 +52,8 @@ def test_arrow_kernel_matches_catalyst_kernel(spark):
             assert cat == arr, f"n={n}: kernel mismatch"
 
 
-def test_simhash_arrow_matches_catalyst(spark, monkeypatch):
-    from s3_log_parser_spark.operators.dedup import simhash_df
+def test_simhash_arrow_matches_catalyst(spark):
+    from s3_log_parser_spark.operators.dedup import _simhash_df_catalyst, simhash_df
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for bits in (16, 64):
@@ -62,12 +62,10 @@ def test_simhash_arrow_matches_catalyst(spark, monkeypatch):
                 r["id"]: r["simhash"]
                 for r in simhash_df(src, bits=bits).collect()
             }
-            monkeypatch.setenv("SPARK_GRAFT_SHINGLE_IMPL", "catalyst")
             cat = {
                 r["id"]: r["simhash"]
-                for r in simhash_df(src, bits=bits).collect()
+                for r in _simhash_df_catalyst(src, bits=bits).collect()
             }
-            monkeypatch.delenv("SPARK_GRAFT_SHINGLE_IMPL")
             assert arrow == cat, f"bits={bits}"
 
 
@@ -79,20 +77,6 @@ def test_shingle_frame_routes_through_arrow_by_default(spark):
     assert "MapInArrow" in plan
     # map-side only: the kernel adds no exchange
     assert "Exchange" not in plan
-
-
-def test_catalyst_fallback_env(spark, monkeypatch):
-    from s3_log_parser_spark.operators import dedup
-
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_IMPL", "catalyst")
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = (
-        dedup.shingle_frame(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" not in plan
 
 
 def test_xxhash64_kernel_matches_catalyst(spark):

@@ -50,6 +50,26 @@ def test_stream_router_end_to_end(spark, transcripts, stream_dirs):
     assert got == want
 
 
+def test_stream_and_batch_share_the_arrow_parse(spark, stream_dirs):
+    """both slim plans run the production Arrow kernel: the batch plan
+    as its one MapInArrow stage beside the ST1 window's one exchange,
+    with no pandas UDF. A streaming source has no executed or optimized
+    plan before it starts, so the stream is checked on the analyzed
+    plan."""
+    from s3_log_parser_spark.plans.pipeline import build_slim
+
+    src = stream_dirs[0]
+    batch = build_slim(spark.read.parquet(src))
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "ArrowEvalPython" not in plan
+
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src)
+    analyzed = build_slim_stream(stream)._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" in analyzed
+
+
 def test_stream_resume_no_duplicates(spark, stream_dirs):
     """restarting from the same checkpoint must not re-append data
     (source offsets are committed → idempotent resume)."""
